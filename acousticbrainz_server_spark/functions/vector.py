@@ -1,10 +1,12 @@
 """Vector math kernels as native Spark column expressions (no UDFs).
 
-Reference semantics: similarity/metrics.py (z-score normalize :33-45, weighted
-decay :48-58, circle embedding :89-96) and index_model.py (angular distance =
-sqrt(2-2*cos), the Annoy definition, :226-244).  Everything here stays inside
-whole-stage codegen — ``F.aggregate``/``F.zip_with`` compile to JVM loops over
-the array, which beats an Arrow round-trip for 13-83-dim vectors.
+Reference semantics: similarity/metrics.py (z-score normalize :33-45) and
+index_model.py (angular distance = sqrt(2-2*cos), the Annoy definition,
+:226-244).  Everything here stays in the JVM, which beats an Arrow round-trip
+for 13-83-dim vectors, but it is not compiled into whole-stage codegen:
+``F.aggregate``/``F.zip_with`` (ArrayAggregate, ZipWith — as ArrayTransform,
+ArrayFilter and ArrayExists do) implement ``CodegenFallback`` in Spark 4.1.2,
+so the generated stage calls back into an interpreted evaluation per row.
 """
 
 from __future__ import annotations
@@ -46,8 +48,3 @@ def zscore(x: Column, means: Column, stddevs: Column) -> Column:
         lambda d, s: F.when(s != 0.0, d / s).otherwise(d),
     )
 
-
-def decay_weights(x: Column, base: float = 0.95) -> Column:
-    """Geometric per-index decay x[i] * base**i
-    (reference similarity/metrics.py:48-58, weighted mfcc/gfcc)."""
-    return F.transform(x, lambda v, i: v * F.pow(F.lit(base), i.cast("double")))

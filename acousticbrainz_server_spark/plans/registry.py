@@ -76,30 +76,13 @@ def _load_all() -> None:
 # green the packed-lane rewrite voids).  Names absent from this list keep
 # registration order after it; names listed but not registered are ignored.
 #
-# ROUND-13 WINDOW.  Composition, per the standing doctrine (new + plan
-# touches first, then the oldest currently-valid greens, vintages computed
-# from the CORRECTNESS_r1-r12 union, never from a verdict's stated floor):
-# (a) no new queries in r13 (optimization round 2 of 2);
-# (b) r13 plan touches (a touch voids the older green):
-#     - the O(L) text-kernel rewrite (HOF let-binding shingle/cuts builds):
-#       cdc_chunk_dedup + the five char_shingle_stream consumers
-#       (minhash_fingerprint, minhash_lsh_neardup, minhash_recall_eval,
-#       cross_snapshot_dedup, corpus_build_pipeline);
-#     - neardup_cluster_assign (connected_components explode
-#       symmetrization + fused edge dedup);
-#     - the scratch-TTL touch_scratch_tag reuse paths + the derived
-#       _STREAM_STATE_PARTITIONS formula (same value at the driver's core
-#       counts, but the code path changed): the ttb/wma/sink/upsert/
-#       incremental-corpus streaming builders and the bucketed sketch
-#       scratch (streaming_state_timetravel, streaming_state_changefeed,
-#       streaming_observe_metrics, streaming_python_sink_rollup,
-#       streaming_join_state_changefeed, streaming_upsert_foreachbatch,
-#       streaming_incremental_corpus, streaming_watermark_audit{,_rocksdb},
-#       streaming_watermark_update_audit, bucketed_join_rollup);
-# (c) rotation fill: the 24 remaining r7-vintage rows not covered above
-#     (matryoshka_recall_eval .. zipf_token_slope) — after this window ONE
-#     r7 row remains only where it sits in the touch set — plus the
-#     alphabetically-first 8 of the r8-vintage rows.
+# CURRENT WINDOW.  Code-path touches first (a touch voids the older green),
+# then the previous window's remaining rows in their order, up to 50:
+# - scratch ownership: every scratch builder now takes its dir from
+#   session.scratch_dir (one pid-named root per process), and the
+#   stream-state partition count is derived from the live session when a
+#   stream starts: all 22 streaming_* queries, the 8 export round trips
+#   (export_queries._scratch) and bucketed_join_rollup.
 # History: r1-r2 relational/vector core; r3 extensions; r4 re-checks +
 # sketches/streaming; r5 export/ingest + 43 extensions; r6 the 47
 # session-2/3 additions; r7 the 19 r6-new + simhash rewrites + 29
@@ -107,30 +90,51 @@ def _load_all() -> None:
 # r9 touches/new + all r2/r3 rows + first 19 r4 rows; r10 the r10
 # touches/new + last 25 r4 + first 16 r5; r11 the 5 r11-new + 4 touches
 # + last 28 r5 + first 13 r6; r12 the 1 r12-new + 6 touches + all 25
-# remaining r6 + first 18 r7 (50/50 green every round).
+# remaining r6 + first 18 r7; r13 7 text-kernel/CC plan touches + 11
+# scratch/state-partition touches + the last 24 r7 + first 8 r8 rows
+# (50/50 green every round).
 DRIVER_ORDER_HEAD: tuple[str, ...] = (
-    # -- r13 plan touches: O(L) text kernels (void the older greens) --
+    # -- scratch_dir + derived state partitions: streaming --
+    "streaming_daily_counts",
+    "streaming_offsets_stateful",
+    "streaming_sessionize",
+    "streaming_dedup_distinct",
+    "streaming_dedup_within_watermark",
+    "streaming_interval_join",
+    "streaming_enrich_dim",
+    "streaming_upsert_foreachbatch",
+    "streaming_sliding_counts",
+    "streaming_interval_join_left",
+    "streaming_python_source_rollup",
+    "streaming_incremental_corpus",
+    "streaming_watermark_audit",
+    "streaming_watermark_audit_rocksdb",
+    "streaming_watermark_update_audit",
+    "streaming_state_introspection",
+    "streaming_state_timetravel",
+    "streaming_state_changefeed",
+    "streaming_observe_metrics",
+    "streaming_python_sink_rollup",
+    "streaming_state_join_introspection",
+    "streaming_join_state_changefeed",
+    # -- scratch_dir: export round trips and the bucketed join --
+    "dump_tsv_roundtrip",
+    "dump_json_shards",
+    "dump_csv_features",
+    "dump_incremental_window",
+    "orc_roundtrip",
+    "partitioned_write_prune",
+    "schema_evolution_merge",
+    "dump_archive_roundtrip",
+    "bucketed_join_rollup",
+    # -- previous window's first 19 remaining rows, to fill 50 --
     "cdc_chunk_dedup",
     "minhash_fingerprint",
     "minhash_lsh_neardup",
     "minhash_recall_eval",
     "cross_snapshot_dedup",
     "corpus_build_pipeline",
-    # -- r13 plan touch: CC explode symmetrization + fused edge dedup --
     "neardup_cluster_assign",
-    # -- r13 code-path touches: scratch TTL + derived state partitions --
-    "streaming_state_timetravel",
-    "streaming_state_changefeed",
-    "streaming_observe_metrics",
-    "streaming_python_sink_rollup",
-    "streaming_join_state_changefeed",
-    "streaming_upsert_foreachbatch",
-    "streaming_incremental_corpus",
-    "streaming_watermark_audit",
-    "streaming_watermark_audit_rocksdb",
-    "streaming_watermark_update_audit",
-    "bucketed_join_rollup",
-    # -- rotation: the 24 remaining r7-vintage rows --
     "matryoshka_recall_eval",
     "nation_market_share",
     "nation_trade_volume",
@@ -143,27 +147,6 @@ DRIVER_ORDER_HEAD: tuple[str, ...] = (
     "recursive_cte_reachability",
     "regional_supplier_volume",
     "returned_item_losses",
-    "rfm_segmentation",
-    "session_window_native",
-    "simhash_fingerprint",
-    "simhash_neardup",
-    "simhash_recall_eval",
-    "slow_fulfillment_suppliers",
-    "top_supplier_revenue",
-    "transpose_metrics_matrix",
-    "variant_props_rollup",
-    "window_rank_suite",
-    "xml_roundtrip",
-    "zipf_token_slope",
-    # -- rotation: the alphabetically-first 8 r8-vintage rows --
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "anti_join_unprocessed",
-    "asof_latest_purchase",
-    "benchmark_contamination",
-    "categorical_mi_entropy",
-    "circle_of_fifths_embedding",
-    "cohort_ltv_curve",
 )
 
 

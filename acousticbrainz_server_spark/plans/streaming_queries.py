@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import round_half_up, sql_round_half_up
-from ..session import touch_scratch_tag
+from ..session import scratch_dir
 from ..sources.tables import load_events_stream, load_table
 from .registry import query
 
@@ -39,27 +39,25 @@ import contextlib
 # interleaved min-over-3 trials per setting): family totals 46.4 s (4) vs
 # 45.3 s (8) — a tie inside the noise band; 8 wins the stream-stream joins
 # by 0.2-0.7 s, 4 wins the small single-operator streams by 0.05-0.2 s.
-# With no measurable winner, the knob is DERIVED from the session core
-# count instead of staying a magic local constant: cores/8 with a floor of
-# 4 keeps today's layout at both driver core counts (32 -> 4, 8 -> 4) and
-# sizes up on real clusters, where per-partition state stops being trivial
-# and parallelism wins (AQE does not apply to stateful stages, so this is
-# the one partitioning that must be chosen ahead of time).  Job-scoped
-# here, not in the session defaults.
-from ..session import DEFAULT_CPUS as _DEFAULT_CPUS
-
-_STREAM_STATE_PARTITIONS = max(4, _DEFAULT_CPUS // 8)
-
-
+# With no measurable winner, the knob is DERIVED from the running session's
+# parallelism instead of staying a magic local constant: cores/8 with a
+# floor of 4 keeps today's layout at both measured core counts (32 -> 4,
+# 8 -> 4) and sizes up on real clusters, where per-partition state stops
+# being trivial and parallelism wins (AQE does not apply to stateful
+# stages, so this is the one partitioning that must be chosen ahead of
+# time).  Job-scoped here, not in the session defaults.
 @contextlib.contextmanager
-def _stream_state_partitions(spark: SparkSession, n: int = _STREAM_STATE_PARTITIONS):
+def _stream_state_partitions(spark: SparkSession, n: int | None = None):
+    """Run the enclosed stream starts with ``n`` shuffle (= state-store)
+    partitions, by default derived from the live session; yields ``n``."""
+    if n is None:
+        n = max(4, spark.sparkContext.defaultParallelism // 8)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
-        yield
+        yield n
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-
 
 
 @query(
@@ -405,17 +403,14 @@ def streaming_enrich_dim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_upsert_foreachbatch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
     from ..sources.tables import load_table
 
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_upsert", tag)
+    base = scratch_dir("upsert", os.path.abspath(sf_dir))
     src_dir = os.path.join(base, "src")
     state_dir = os.path.join(base, "state")
     # fresh state every run (the merge is idempotent over the same input,
@@ -426,7 +421,6 @@ def streaming_upsert_foreachbatch_q(spark: SparkSession, sf_dir: str) -> DataFra
         # pre-split the (ts-normalized) events into 4 files => 4 micro-batches
         ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
         ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-    touch_scratch_tag(base)
     schema = spark.read.parquet(src_dir).schema
 
     def upsert(batch_df, batch_id):
@@ -912,14 +906,11 @@ def _sic_pack(spark: SparkSession, state_dir: str) -> DataFrame:
 )
 def streaming_incremental_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import hashlib
     import os
     import shutil
-    import tempfile
     import uuid
 
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_inc_corpus", tag)
+    base = scratch_dir("inc_corpus", os.path.abspath(sf_dir))
     src_dir = os.path.join(base, "src")
     state_dir = os.path.join(base, "state")
     # fresh state per invocation, including swap staging leftovers
@@ -931,7 +922,6 @@ def streaming_incremental_corpus_q(spark: SparkSession, sf_dir: str) -> DataFram
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "lang", "text"
         ).repartition(_SIC_BATCHES).write.mode("overwrite").parquet(src_dir)
-    touch_scratch_tag(base)
 
     with _stream_state_partitions(spark):
         # fresh checkpoint per invocation: each run replays the whole
@@ -959,14 +949,11 @@ def _wma_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the 4-file mtime-ordered watermark-audit backlog (shared
     by the append- and update-mode audits): f0 bulk on-time (event_id%7!=0),
     f1 on-time spacer (%7==0), f2 the 10% late sample, f3 the final
-    ``_WMA_RECENT_US`` days.  Idempotent per (sf_dir, pid)."""
-    import hashlib
+    ``_WMA_RECENT_US`` days.  Idempotent per (sf_dir, process)."""
     import os
     import shutil
-    import tempfile
 
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_wm_audit", tag)
+    base = scratch_dir("wm_audit", os.path.abspath(sf_dir))
     src_dir = os.path.join(base, "src")
     if not os.path.exists(os.path.join(src_dir, "_DONE")):
         shutil.rmtree(src_dir, ignore_errors=True)
@@ -997,7 +984,6 @@ def _wma_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             # mtime IS the stream order: one file per micro-batch, ascending
             os.utime(dst, (now - 100 + i * 10, now - 100 + i * 10))
         open(os.path.join(src_dir, "_DONE"), "w").write("ok\n")
-    touch_scratch_tag(base)
     return base, src_dir
 
 
@@ -1273,22 +1259,17 @@ _SSRC_SINK = "streaming_state_introspect_sink"
 def streaming_state_introspection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
     import uuid
 
     ev = load_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    # pid-tagged base (same reason as _wma_build_src): a shared base whose
-    # siblings are rmtree'd at invocation start would let a concurrent
-    # process (dual-SF gate, bench overlapping a driver run) delete a LIVE
-    # checkpoint or invalidate a lazily-read statestore DataFrame.  Each
-    # process cleans only within its own tag.
-    base = os.path.join(
-        tempfile.gettempdir(), f"abspark_state_introspect_{os.getpid()}"
-    )
-    if os.path.isdir(base):  # each invocation reads only its own checkpoint
-        for stale in os.listdir(base):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
+    # process-owned base: a shared base whose siblings are rmtree'd at
+    # invocation start would let a concurrent process (dual-SF gate, two
+    # overlapping bench runs) delete a LIVE checkpoint or invalidate a
+    # lazily-read statestore DataFrame.  Each process cleans only its own.
+    base = scratch_dir("state_introspect", os.path.abspath(sf_dir))
+    for stale in os.listdir(base):  # each invocation reads only its own checkpoint
+        shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
     ckpt = os.path.join(base, uuid.uuid4().hex[:12])
     with _stream_state_partitions(spark):
         q = (
@@ -1319,14 +1300,13 @@ def _ttb_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ``event_id % 4 == k``, so micro-batch k's content is a pure predicate a
     SQL oracle can reconstruct (``GROUP BY event_id % 4``) — the same trick
     ``_wma_build_src`` uses with mtime as the stream order.  Idempotent per
-    (sf_dir, pid, source-content fingerprint) — the fingerprint (mtime+size
-    of every file under the events table path) keys the cache tag, so a
-    regenerated testdata dir or a recycled pid hitting a surviving /tmp
+    (sf_dir, process, source-content fingerprint) — the fingerprint
+    (mtime+size of every file under the events table path) is part of the
+    scratch key, so a testdata dir regenerated while this process runs
     rebuilds instead of silently feeding stale batches (ADVICE r11)."""
     import hashlib
     import os
     import shutil
-    import tempfile
     import time as _time
 
     ev_path = os.path.join(os.path.abspath(sf_dir), "events.parquet")
@@ -1338,10 +1318,7 @@ def _ttb_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     elif os.path.exists(ev_path):
         st = os.stat(ev_path)
         fp.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.getpid()}:{fp.hexdigest()}".encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), "abspark_ttbatch", tag)
+    base = scratch_dir("ttbatch", f"{os.path.abspath(sf_dir)}:{fp.hexdigest()}")
     src_dir = os.path.join(base, "src")
     if not os.path.exists(os.path.join(src_dir, "_DONE")):
         shutil.rmtree(src_dir, ignore_errors=True)
@@ -1362,7 +1339,6 @@ def _ttb_build_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             # mtime IS the stream order: one file per micro-batch, ascending
             os.utime(dst, (now - 100 + k * 10, now - 100 + k * 10))
         open(os.path.join(src_dir, "_DONE"), "w").write("ok\n")
-    touch_scratch_tag(base)
     return base, src_dir
 
 
@@ -1384,11 +1360,10 @@ def _ttb_run_count_stream(spark: SparkSession, sf_dir: str, sink_name: str) -> s
     the time-travel and change-feed readers then query."""
     import os
     import shutil
-    import tempfile
     import uuid
 
     base, src_dir = _ttb_build_src(spark, sf_dir)
-    # per-invocation checkpoint under the pid-tagged base; clean own leftovers
+    # per-invocation checkpoint under the process-owned base; clean own leftovers
     for stale in os.listdir(base):
         if stale.startswith("ckpt-" + sink_name + "-"):
             shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
@@ -1686,7 +1661,6 @@ def streaming_python_sink_rollup_q(spark: SparkSession, sf_dir: str) -> DataFram
 def streaming_state_join_introspection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
     import uuid
 
     purchases = (
@@ -1714,12 +1688,9 @@ def streaming_state_join_introspection_q(spark: SparkSession, sf_dir: str) -> Da
         F.expr("p_user = c_user AND c_ts BETWEEN p_ts - interval 24 hours AND p_ts"),
         "inner",
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"abspark_join_introspect_{os.getpid()}"
-    )
-    if os.path.isdir(base):  # clean only within this pid's tag
-        for stale in os.listdir(base):
-            shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
+    base = scratch_dir("join_introspect", os.path.abspath(sf_dir))
+    for stale in os.listdir(base):  # clean only within this process's dir
+        shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
     ckpt = os.path.join(base, uuid.uuid4().hex[:12])
     with _stream_state_partitions(spark):
         q = (
@@ -1814,7 +1785,6 @@ _JCF_CHANGELOG_CONF = (
 def streaming_join_state_changefeed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
     import uuid
 
     base, src_dir = _ttb_build_src(spark, sf_dir)

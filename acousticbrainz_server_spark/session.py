@@ -18,87 +18,76 @@ and driver-memory (which come from spark-submit there).  Key choices:
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-_SCRATCH_TTL_SEC = 6 * 3600
 _reaped = False
+_scratch_owner: int | None = None
 
 
-def touch_scratch_tag(path: str) -> None:
-    """Refresh a tag-keyed scratch subdir's mtime on REUSE (r12 verdict #3:
-    a live process reusing a >TTL-old tag could race a concurrently starting
-    process's :func:`reap_scratch`, which keys staleness on the tag dir's
-    own mtime).  Every ``_DONE``-guarded builder calls this on its reuse
-    path, so a tag in active use always looks fresh to the reaper."""
-    import time
-
-    try:
-        now = time.time()
-        os.utime(path, (now, now))
-    except OSError:
-        pass
+def _scratch_root(pid: int) -> str:
+    return os.path.join(tempfile.gettempdir(), f"abspark_{pid}")
 
 
-def reap_scratch(ttl_sec: int = _SCRATCH_TTL_SEC) -> list[str]:
-    """Reap orphaned ``abspark_*`` scratch under the system temp dir (r11
-    verdict #5: ~35 dead-pid tags had accumulated across rounds).  Two
-    classes, both safe-by-construction:
+def _remove_scratch_root(pid: int) -> None:
+    if os.getpid() == pid:  # a forked child inherits the hook, not the root
+        shutil.rmtree(_scratch_root(pid), ignore_errors=True)
 
-    - ``abspark_<name>_<pid>`` directories whose pid is DEAD (pid-keyed
-      scratch is only ever touched by its owner, so a dead owner means the
-      tree is garbage);
-    - tag-keyed cache subdirs (``abspark_ttbatch/<md5>``,
-      ``abspark_sink_strikes/<md5>``, ...) older than ``ttl_sec`` — their
-      builders are idempotent behind ``_DONE``/marker guards, so a reaped
-      tag is rebuilt on next use, never corrupted.
 
-    Top-level non-pid dirs themselves (``abspark_bucketed`` etc.) are
-    persistent caches and are left alone.  Returns the removed paths."""
-    import re
-    import shutil
-    import tempfile
-    import time
+def scratch_dir(kind: str, key: str) -> str:
+    """This process's scratch dir for ``(kind, key)``, created on first use:
+    ``<tmp>/abspark_<pid>/<kind>/<md5(key)[:8]>``.
 
+    Every ``abspark_*`` scratch area except the sink strike markers
+    (sources/pydatasource.py) lives under the one ``abspark_<pid>`` root, so
+    its owner is visible in the path: an ``atexit`` hook removes the root
+    when this process exits, and :func:`reap_scratch` removes the roots of
+    processes that died without running it.  A root that already exists at
+    this process's first use was left by a dead process with the same pid,
+    so it is cleared, never reused."""
+    global _scratch_owner
+    pid = os.getpid()
+    if _scratch_owner != pid:
+        _scratch_owner = pid
+        shutil.rmtree(_scratch_root(pid), ignore_errors=True)
+        atexit.register(_remove_scratch_root, pid)
+    tag = hashlib.md5(key.encode()).hexdigest()[:8]
+    path = os.path.join(_scratch_root(pid), kind, tag)
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+def reap_scratch() -> list[str]:
+    """Remove the scratch roots (``abspark_<pid>``, see :func:`scratch_dir`)
+    of processes that are no longer running.  A root whose pid is alive,
+    this process's own included, is never touched.  Returns the removed
+    paths."""
     removed: list[str] = []
     tmp = tempfile.gettempdir()
-    now = time.time()
     try:
-        entries = [e for e in os.listdir(tmp) if e.startswith("abspark_")]
+        entries = os.listdir(tmp)
     except OSError:
         return removed
     for e in entries:
-        path = os.path.join(tmp, e)
-        if not os.path.isdir(path):
+        m = re.fullmatch(r"abspark_(\d+)", e)
+        if not m or int(m.group(1)) == os.getpid():
             continue
-        m = re.match(r".*_(\d+)$", e)
-        if m:
-            pid = int(m.group(1))
-            if pid != os.getpid():
-                try:
-                    os.kill(pid, 0)
-                except ProcessLookupError:
-                    shutil.rmtree(path, ignore_errors=True)
-                    removed.append(path)
-                except OSError:
-                    pass
-            continue
-        # tag-keyed cache: reap only STALE subdirs, keep the parent
         try:
-            subs = os.listdir(path)
-        except OSError:
-            continue
-        for s in subs:
-            sp = os.path.join(path, s)
-            try:
-                if os.path.isdir(sp) and now - os.stat(sp).st_mtime > ttl_sec:
-                    shutil.rmtree(sp, ignore_errors=True)
-                    removed.append(sp)
-            except OSError:
-                pass
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            path = os.path.join(tmp, e)
+            shutil.rmtree(path, ignore_errors=True)
+            removed.append(path)
+        except OSError:  # EPERM: alive, owned by another user
+            pass
     return removed
 
 

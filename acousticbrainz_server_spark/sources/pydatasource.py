@@ -272,9 +272,11 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
     Strike markers live OUTSIDE the data directory, under a tmp-area tag
     keyed by the sink path (``abspark_sink_strikes/<md5(path)>``), so the
     committed output directory only ever contains parts + manifests —
-    external consumers listing it never see test debris, and the tag is
-    reaped by the same dead-pid TTL sweep as every other ``abspark_*``
-    scratch area.
+    external consumers listing it never see test debris.  Unlike every other
+    ``abspark_*`` scratch area they are not under a process's scratch root
+    (session.scratch_dir): a marker must outlive the process that struck, so
+    the restarted query's replay of that batch sees it.  Each marker is
+    deleted when its batch commits, so none needs a sweep.
 
     Deployment constraint: same shared-filesystem assumption as
     JsonLinesWriter (driver renames executor-written temps).
@@ -298,9 +300,34 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
         import tempfile
 
         tag = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:12]
-        d = os.path.join(tempfile.gettempdir(), "abspark_sink_strikes", tag)
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"strike-{batch_id}")
+        return os.path.join(tempfile.gettempdir(), "abspark_sink_strikes", tag, f"strike-{batch_id}")
+
+    def _inject_failure(self, batch_id: int, point: str) -> None:
+        """Raise once if this sink is armed to fail ``batch_id`` at ``point``."""
+        import os
+
+        if self.fail_at_batch != batch_id or self.fail_point != point:
+            return
+        strike = self._strike_path(batch_id)
+        if os.path.exists(strike):
+            return
+        os.makedirs(os.path.dirname(strike), exist_ok=True)
+        open(strike, "w").write("struck\n")
+        raise RuntimeError(f"injected commit failure {point.replace('_', ' ')}, batch {batch_id}")
+
+    def _clear_strike(self, batch_id: int) -> None:
+        """``batch_id`` committed: drop its marker, if any, and the marker
+        dirs it leaves empty (the replaying query need not be armed)."""
+        import os
+
+        strike = self._strike_path(batch_id)
+        tag_dir = os.path.dirname(strike)
+        try:
+            os.remove(strike)
+            os.rmdir(tag_dir)
+            os.rmdir(os.path.dirname(tag_dir))
+        except OSError:  # no marker, or a dir still holds others
+            pass
 
     def write(self, iterator):
         import json
@@ -332,12 +359,9 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
             # checkpoint's offset commit): already visible — drop the fresh
             # temps and skip.  THE exactly-once guard.
             self.abort(messages, batchId)
+            self._clear_strike(batchId)
             return
-        if self.fail_at_batch == batchId and self.fail_point == "before_manifest":
-            strike = self._strike_path(batchId)
-            if not os.path.exists(strike):
-                open(strike, "w").write("struck\n")
-                raise RuntimeError(f"injected commit failure before manifest, batch {batchId}")
+        self._inject_failure(batchId, "before_manifest")
         finals = []
         for i, m in enumerate(messages):
             if m is None:
@@ -363,11 +387,8 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
             os.fsync(dfd)
         finally:
             os.close(dfd)
-        if self.fail_at_batch == batchId and self.fail_point == "after_manifest":
-            strike = self._strike_path(batchId)
-            if not os.path.exists(strike):
-                open(strike, "w").write("struck\n")
-                raise RuntimeError(f"injected commit failure after manifest, batch {batchId}")
+        self._inject_failure(batchId, "after_manifest")
+        self._clear_strike(batchId)
 
     def abort(self, messages, batchId: int) -> None:
         import os

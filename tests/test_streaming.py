@@ -842,12 +842,14 @@ def test_python_stream_sink_kill_resume(spark, tmp_path, fail_point):
         _ttb_stream,
     )
     from acousticbrainz_server_spark.sources.pydatasource import (
+        JsonLinesStreamWriter,
         register_jsonlines_sink,
     )
 
     register_jsonlines_sink(spark)
     _base, src = _ttb_build_src(spark, "/root/testdata/sf0.001")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")  # PINNED ckpt
+    strike = JsonLinesStreamWriter({"path": out}, _ttb_stream(spark, src).schema)._strike_path(2)
 
     q = (
         _ttb_stream(spark, src)
@@ -862,6 +864,7 @@ def test_python_stream_sink_kill_resume(spark, tmp_path, fail_point):
     with pytest.raises(Exception, match="injected commit failure"):
         q.awaitTermination()
     assert not q.isActive
+    assert os.path.exists(strike)  # the marker outlives the failed query
     visible = _manifest_batches(out)
     if fail_point == "before_manifest":
         assert visible == {0, 1}, visible  # batch 2 died invisible
@@ -880,6 +883,8 @@ def test_python_stream_sink_kill_resume(spark, tmp_path, fail_point):
     )
     q2.awaitTermination(120)
     assert _manifest_batches(out) == {0, 1, 2, 3}
+    # the replayed batch 2 committed, so its strike marker is gone
+    assert not os.path.exists(os.path.dirname(strike))
 
     expect = sorted(
         r.event_id
@@ -1360,11 +1365,12 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     restart MUST keep the checkpoint's state partitioning even when the
     session's spark.sql.shuffle.partitions differs — this test turns the
     implicit invariant behind _stream_state_partitions into an explicit
-    certification.  Protocol: run the windowed aggregation with the pinned
-    8 state partitions, kill mid-backlog, then RESUME under session
-    shuffle.partitions=3.  Spark's contract (certified here, 4.1.2): the
-    checkpoint's offset-log conf WINS silently — no error, no reshuffle of
-    state; the resumed batches still run 8 state partitions (observable in
+    certification.  Protocol: run the windowed aggregation with the state
+    partition count derived from the session, kill mid-backlog, then RESUME
+    under session shuffle.partitions=3.  Spark's contract (certified here,
+    4.1.2): the checkpoint's offset-log conf WINS silently — no error, no
+    reshuffle of state; the resumed batches still run the pinned count of
+    state partitions (observable in
     StreamingQueryProgress.stateOperators[].numShufflePartitions and in the
     on-disk state layout), and the union of outputs stays exact.  A
     mismatch therefore CANNOT corrupt state by mis-keying partitions; the
@@ -1373,7 +1379,6 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     import json
 
     from acousticbrainz_server_spark.plans.streaming_queries import (
-        _STREAM_STATE_PARTITIONS,
         _stream_state_partitions,
         _wma_build_src,
         _wma_windowed_stream,
@@ -1404,10 +1409,12 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
         assert not q.isActive
         progresses.extend(q.recentProgress)
 
-    # one-shot truth at the pinned 8 partitions
+    # one-shot truth at the pinned partition count, derived from the live
+    # session at call time (not from the import-time environment)
     oneshot: list = []
-    with _stream_state_partitions(spark):
+    with _stream_state_partitions(spark) as n_state:
         run(str(tmp_path / "ckpt_oneshot"), oneshot)
+    assert n_state == max(4, spark.sparkContext.defaultParallelism // 8)
     assert len(oneshot) > 0
 
     ckpt = str(tmp_path / "ckpt_pinned")
@@ -1430,20 +1437,19 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     assert len(part2) > 0
 
     # the resumed batches really ran the CHECKPOINT's partitioning, not the
-    # session's: every progress reports _STREAM_STATE_PARTITIONS state partitions
+    # session's: every progress reports n_state state partitions
     n_parts = {
         op["numShufflePartitions"]
         for p in progresses
         for op in json.loads(p.json)["stateOperators"]
     }
-    assert n_parts == {_STREAM_STATE_PARTITIONS}, n_parts
+    assert n_parts == {n_state}, n_parts
 
-    # and the on-disk state layout still has exactly _STREAM_STATE_PARTITIONS
-    # partition dirs
+    # and the on-disk state layout still has exactly n_state partition dirs
     state_parts = sorted(
         int(d) for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()
     )
-    assert state_parts == list(range(_STREAM_STATE_PARTITIONS)), state_parts
+    assert state_parts == list(range(n_state)), state_parts
 
     # the pinning mechanism is visible in the checkpoint itself: the offset
     # log records the conf the query was STARTED with
@@ -1451,4 +1457,4 @@ def test_stateful_restart_pins_checkpoint_shuffle_partitions(spark, tmp_path):
     with open(os.path.join(ckpt, "offsets", off_files[-1])) as f:
         lines = f.read().splitlines()
     conf = json.loads(lines[1])["conf"]
-    assert conf["spark.sql.shuffle.partitions"] == str(_STREAM_STATE_PARTITIONS)
+    assert conf["spark.sql.shuffle.partitions"] == str(n_state)

@@ -71,10 +71,17 @@ def child(cpus: int, sf: str, reps: int, names: list[str]) -> None:
     spark.stop()
 
 
+def _positive_int(s: str) -> int:
+    n = int(s)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", default="8,32")
-    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--reps", type=_positive_int, default=2)
     ap.add_argument("--sf", default=DEFAULT_SF)
     ap.add_argument("--min-warm", type=float, default=2.0)
     ap.add_argument("--child", type=int, default=None, help=argparse.SUPPRESS)
@@ -106,6 +113,10 @@ def main() -> None:
             capture_output=True, text=True, env=env,
         )
         sys.stderr.write(proc.stderr[-4000:])
+        if proc.returncode != 0:
+            raise RuntimeError(
+                f"core_scaling child (cpus={c}) exited {proc.returncode}:\n{proc.stderr[-2000:]}"
+            )
         results[c] = json.loads(proc.stdout.strip().splitlines()[-1])
         meta[c] = {
             "t_start": round(t0, 1),

@@ -1,4 +1,4 @@
-"""Interleaved A/B of ``_STREAM_STATE_PARTITIONS`` over the streaming family.
+"""Interleaved A/B of the stream-state partition count over the streaming family.
 
 r12 verdict item 1: the 8 -> 4 stream-state-partition change was adopted from
 a builder A/B but the driver's contended 32-core draw could not confirm it.
@@ -9,9 +9,9 @@ trial so both settings sample the same measurement window distribution.  The
 estimator is min-over-trials per query per setting (the box shows +-25-40%
 window swings; a lone pair proves nothing).
 
-The knob is consumed as the DEFAULT ARG of the job-scoped context manager
-``_stream_state_partitions`` (bound at def time), so each trial rebinds
-``__defaults__`` — the exact value every query call site uses.
+Every query call site enters the job-scoped context manager
+``_stream_state_partitions`` through its module global, so each trial rebinds
+that global to the manager with ``n`` fixed to the trial's setting.
 
 Writes STREAMAB.json:
     {"settings": [...], "trials": [...per-trial {setting, t_start, t_end,
@@ -27,6 +27,7 @@ Usage: python tools/stream_ab.py [--settings 4,8] [--trials-per 3]
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -57,6 +58,8 @@ def main() -> None:
 
     from acousticbrainz_server_spark.plans import streaming_queries as sq
 
+    derived = sq._stream_state_partitions
+
     # interleave: A B A B A B ... so both settings sample the same windows
     order: list[int] = []
     for _ in range(args.trials_per):
@@ -64,7 +67,7 @@ def main() -> None:
 
     trials: list[dict] = []
     for setting in order:
-        sq._stream_state_partitions.__defaults__ = (setting,)
+        sq._stream_state_partitions = functools.partial(derived, n=setting)
         t_start = time.time()
         la0 = os.getloadavg()
         qtimes: dict[str, float] = {}
@@ -93,7 +96,7 @@ def main() -> None:
             f"loadavg={trials[-1]['loadavg_end']}",
             flush=True,
         )
-    sq._stream_state_partitions.__defaults__ = (sq._STREAM_STATE_PARTITIONS,)
+    sq._stream_state_partitions = derived
 
     min_per: dict[str, dict[str, float]] = {}
     fam_min: dict[str, float] = {}
