@@ -78,11 +78,11 @@ def _load_all() -> None:
 #
 # CURRENT WINDOW.  Code-path touches first (a touch voids the older green),
 # then the previous window's remaining rows in their order, up to 50:
-# - scratch ownership: every scratch builder now takes its dir from
-#   session.scratch_dir (one pid-named root per process), and the
-#   stream-state partition count is derived from the live session when a
-#   stream starts: all 22 streaming_* queries, the 8 export round trips
-#   (export_queries._scratch) and bucketed_join_rollup.
+# - md5-only fingerprints: the xxhash64 hash-family switch is gone from the
+#   MinHash signature aggregates, the LSH band key and the SimHash token
+#   hash, so every caller re-verifies: the 6 dedup_queries MinHash/SimHash
+#   plans, minhash_fingerprint, cross_snapshot_dedup, corpus_build_pipeline.
+#   Their final executed plans are unchanged; the window re-checks them.
 # History: r1-r2 relational/vector core; r3 extensions; r4 re-checks +
 # sketches/streaming; r5 export/ingest + 43 extensions; r6 the 47
 # session-2/3 additions; r7 the 19 r6-new + simhash rewrites + 29
@@ -94,7 +94,17 @@ def _load_all() -> None:
 # scratch/state-partition touches + the last 24 r7 + first 8 r8 rows
 # (50/50 green every round).
 DRIVER_ORDER_HEAD: tuple[str, ...] = (
-    # -- scratch_dir + derived state partitions: streaming --
+    # -- md5-only fingerprints: MinHash/SimHash callers --
+    "minhash_fingerprint",
+    "cross_snapshot_dedup",
+    "corpus_build_pipeline",
+    "simhash_fingerprint",
+    "simhash_neardup",
+    "neardup_cluster_assign",
+    "minhash_lsh_neardup",
+    "minhash_recall_eval",
+    "simhash_recall_eval",
+    # -- previous window's first 41 remaining rows, to fill 50 --
     "streaming_daily_counts",
     "streaming_offsets_stateful",
     "streaming_sessionize",
@@ -117,7 +127,6 @@ DRIVER_ORDER_HEAD: tuple[str, ...] = (
     "streaming_python_sink_rollup",
     "streaming_state_join_introspection",
     "streaming_join_state_changefeed",
-    # -- scratch_dir: export round trips and the bucketed join --
     "dump_tsv_roundtrip",
     "dump_json_shards",
     "dump_csv_features",
@@ -127,14 +136,7 @@ DRIVER_ORDER_HEAD: tuple[str, ...] = (
     "schema_evolution_merge",
     "dump_archive_roundtrip",
     "bucketed_join_rollup",
-    # -- previous window's first 19 remaining rows, to fill 50 --
     "cdc_chunk_dedup",
-    "minhash_fingerprint",
-    "minhash_lsh_neardup",
-    "minhash_recall_eval",
-    "cross_snapshot_dedup",
-    "corpus_build_pipeline",
-    "neardup_cluster_assign",
     "matryoshka_recall_eval",
     "nation_market_share",
     "nation_trade_volume",
@@ -144,9 +146,6 @@ DRIVER_ORDER_HEAD: tuple[str, ...] = (
     "product_type_profit",
     "promo_revenue_share",
     "python_udtf_chunk_profile",
-    "recursive_cte_reachability",
-    "regional_supplier_volume",
-    "returned_item_losses",
 )
 
 
